@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from curatorhadoopinterface_spark.io import proc_scratch
 from curatorhadoopinterface_spark.operators import query
-from curatorhadoopinterface_spark.session import load_table
+from curatorhadoopinterface_spark.session import cut_lineage, load_table, reused
 
 
 # --------------------------------------------------------------------------
@@ -462,9 +462,7 @@ FUZZY_CHECKPOINT_MIN_DOCS = 50_000
     WHERE rp.ha < rp.hb OR a.doc_id < b.doc_id
     """,
 )
-def dedup_fuzzy_edit(
-    spark: SparkSession, sf_dir: str, checkpoint: bool | None = None
-) -> DataFrame:
+def dedup_fuzzy_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by bounded edit distance, REP-FACTORED: the
     O(len^2)-per-pair Levenshtein runs once per DISTINCT 200-char text
     prefix pair inside each (20-char prefix, length/20) block — never
@@ -481,17 +479,14 @@ def dedup_fuzzy_edit(
     Distance on a 200-char cap: per-rep-pair cost bounded no matter how
     long documents get. JVM-side F.levenshtein (no Python).
 
-    ``checkpoint=None`` (default) gates the rep-pair barrier on corpus
-    size: below FUZZY_CHECKPOINT_MIN_DOCS the lazy r1-r4 plan wins (the
-    barrier pays fixed materialization cost a small fixture never
-    recoups — the lone 1.87x bench grazer of round 5); at scale the
-    barrier is what keeps the DP once-per-distinct-pair. The size probe
-    is a parquet metadata COUNT (row-group stats, no data read).
-    ``True``/``False`` force either branch (False also serves plan
-    audits, which need the un-checkpointed lazy plan)."""
+    The rep-pair barrier is gated on corpus size: below
+    FUZZY_CHECKPOINT_MIN_DOCS the lazy r1-r4 plan wins (the barrier pays
+    fixed materialization cost a small fixture never recoups — the lone
+    1.87x bench grazer of round 5); at scale the barrier is what keeps
+    the DP once-per-distinct-pair. The size probe is a parquet metadata
+    COUNT (row-group stats, no data read)."""
     docs = load_table(spark, sf_dir, "documents")
-    if checkpoint is None:
-        checkpoint = docs.count() >= FUZZY_CHECKPOINT_MIN_DOCS
+    big = docs.count() >= FUZZY_CHECKPOINT_MIN_DOCS
     m = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.substring("text", 1, 20).alias("blk_prefix"),
@@ -519,14 +514,14 @@ def dedup_fuzzy_edit(
         )
         .filter(F.col("edit_dist") <= 5)
     )
-    if checkpoint:
+    if big:
         # materialization BARRIER: without it Catalyst inlines rep_pairs
         # into the expansion joins and recomputes the Levenshtein DP per
         # EXPANDED pair — the naive cost again, observed live at sf10
         # (jstack: levenshteinDistance inside the final-stage BHJ, 17 min
         # single-task). The rep-pair table is a few thousand rows, so the
         # eager cut is milliseconds. (Oracle twin: AS MATERIALIZED.)
-        rep_pairs = rep_pairs.localCheckpoint(eager=False)
+        rep_pairs = cut_lineage(rep_pairs, eager=False)
     a, b = m.alias("a"), m.alias("b")
     return (
         rep_pairs.join(
@@ -747,7 +742,7 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p2 JOIN deg_p ON p2.p = deg_p.p
     """,
 )
-def graph_pagerank(spark: SparkSession, sf_dir: str, checkpoint: bool = True) -> DataFrame:
+def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two full power-iteration rounds of PageRank (damping 0.85) over
     the bipartite order<->part graph from lineitem edges. Each round is
     join(scores, edges) + groupBy — the Pregel-in-DataFrames shape. The
@@ -780,22 +775,16 @@ def graph_pagerank(spark: SparkSession, sf_dir: str, checkpoint: bool = True) ->
     no widened edges⋈degrees operand is ever built or cached. The final
     result is eagerly localCheckpoint-ed (the dedup.py pattern) so every
     cache can be unpersisted before return — no cached blocks leak into
-    the shared session.
+    the shared session, raise or return.
 
     Measured at sf0.1 local[32]: 3.3-3.7s (r3 triple-persist layout) ->
     2.7-2.8s clean."""
     l = load_table(spark, sf_dir, "lineitem")
     base = l.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-    edges_o = base.repartition("o").distinct().persist()
-    edges_p = edges_o.repartition("p").persist()
-    deg_o = edges_o.groupBy("o").agg(F.count(F.lit(1)).alias("d_o")).persist()
-    deg_p = edges_p.groupBy("p").agg(F.count(F.lit(1)).alias("d_p")).persist()
-    # materialize the o-side chain first, THEN the p-side: edges_p's
-    # lineage reads the edges_o cache, which must already be populated
-    # (a single fused action would race the two branches into a double
-    # scan+distinct)
-    n_o = deg_o.count()
-    n_p = deg_p.count()
+    edges_o = base.repartition("o").distinct()
+    edges_p = edges_o.repartition("p")
+    deg_o = edges_o.groupBy("o").agg(F.count(F.lit(1)).alias("d_o"))
+    deg_p = edges_p.groupBy("p").agg(F.count(F.lit(1)).alias("d_p"))
 
     SCALE = 10**15
 
@@ -818,24 +807,24 @@ def graph_pagerank(spark: SparkSession, sf_dir: str, checkpoint: bool = True) ->
             )
         )
 
-    r0 = deg_o.select("o", F.lit(SCALE // n_o).alias("s"))
-    p1 = push(r0, deg_o, "o", "p", n_p)
-    r1 = push(p1, deg_p, "p", "o", n_o)
-    p2 = push(r1, deg_o, "o", "p", n_p)
-    out = p2.join(deg_p, "p").select(
-        F.col("p").alias("l_partkey"),
-        F.round(F.col("s") / F.lit(float(SCALE)), 9).alias("pagerank"),
-        F.col("s").alias("pagerank_fp"),
-        F.col("d_p").alias("part_degree"),
-    )
-    if not checkpoint:
-        # plan-audit path: expose the full (uncheckpointed) plan; the
-        # caller must not unpersist-race a concurrent execution
-        return out
-    out = out.localCheckpoint(eager=True)
-    for cached in (edges_o, edges_p, deg_o, deg_p):
-        cached.unpersist()
-    return out
+    with reused(edges_o, edges_p, deg_o, deg_p):
+        # materialize the o-side chain first, THEN the p-side: edges_p's
+        # lineage reads the edges_o cache, which must already be
+        # populated (a single fused action would race the two branches
+        # into a double scan+distinct)
+        n_o = deg_o.count()
+        n_p = deg_p.count()
+        r0 = deg_o.select("o", F.lit(SCALE // n_o).alias("s"))
+        p1 = push(r0, deg_o, "o", "p", n_p)
+        r1 = push(p1, deg_p, "p", "o", n_o)
+        p2 = push(r1, deg_o, "o", "p", n_p)
+        out = p2.join(deg_p, "p").select(
+            F.col("p").alias("l_partkey"),
+            F.round(F.col("s") / F.lit(float(SCALE)), 9).alias("pagerank"),
+            F.col("s").alias("pagerank_fp"),
+            F.col("d_p").alias("part_degree"),
+        )
+        return cut_lineage(out)
 
 
 @query(
@@ -1200,9 +1189,7 @@ def _copurchase_pairs(li: DataFrame) -> DataFrame:
                  (SELECT COUNT(*) FROM wedges), 6) AS closure
     """,
 )
-def graph_triangles(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count + global closure coefficient over the co-purchase
     graph (parts sharing >= 2 orders), using the DEGREE-ORIENTATION
     algorithm (Schank-Wagner / the MapReduce classic): every undirected
@@ -1224,10 +1211,10 @@ def graph_triangles(
     l = load_table(spark, sf_dir, "lineitem")
     pairs = _copurchase_pairs(l)
     edges = pairs.filter(F.col("together") >= 2).select("p1", "p2")
-    return triangle_stats(edges, checkpoint=checkpoint)
+    return triangle_stats(edges)
 
 
-def triangle_stats(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Degree-oriented triangle tally over undirected (p1 < p2) edges —
     the core of graph_triangles, factored so planted tests can feed
     known graphs (K4 -> 4 triangles, star -> 0).
@@ -1257,15 +1244,13 @@ def triangle_stats(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
     # ReusedExchange between the union's branches). deg itself feeds
     # both orientation lookups, so it checkpoints too (the graph_kcore
     # discipline). Same rows everywhere; only re-executions go away.
-    if checkpoint:
-        edges = edges.localCheckpoint(eager=False)
-    deg = (
+    edges = cut_lineage(edges, eager=False)
+    deg = cut_lineage(
         edges.select(F.explode(F.array("p1", "p2")).alias("node"))
         .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
+        .agg(F.count(F.lit(1)).alias("d")),
+        eager=False,
     )
-    if checkpoint:
-        deg = deg.localCheckpoint(eager=False)
     e = (
         edges.join(deg.alias("da"), F.col("p1") == F.col("da.node"))
         .join(deg.alias("db"), F.col("p2") == F.col("db.node"))
@@ -1280,14 +1265,12 @@ def triangle_stats(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
         F.when(lt, F.col("p1")).otherwise(F.col("p2")).alias("src"),
         F.when(lt, F.col("p2")).otherwise(F.col("p1")).alias("dst"),
     )
-    if checkpoint:
-        # oriented feeds three consumers (degree census, adjacency
-        # build, intersect probe): localCheckpoint materializes the
-        # heavy upstream chain once and — unlike a persist() with no
-        # unpersist — its blocks are freed by the ContextCleaner when
-        # the returned plan is dropped, so a 150-query bench session
-        # doesn't accumulate cached edges
-        oriented = oriented.localCheckpoint(eager=False)
+    # oriented feeds three consumers (degree census, adjacency build,
+    # intersect probe): the cut materializes the heavy upstream chain
+    # once and — unlike a persist() with no unpersist — its blocks are
+    # freed by the ContextCleaner when the returned plan is dropped, so
+    # a 150-query bench session doesn't accumulate cached edges
+    oriented = cut_lineage(oriented, eager=False)
     # branch A — one exploded pass: per-node (out, in) degrees, then
     # n_nodes = count, n_edges = sum(out), n_wedges = sum(out*in)
     node_stats = (
@@ -2410,9 +2393,7 @@ _LP_DEG_CAP = 200  # wedge-center degree cap (hub guard; AA weight ~0 there)
     LIMIT 20
     """,
 )
-def graph_link_prediction(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link prediction on the co-purchase graph: for part pairs NOT yet
     connected (no edge with support >= {min_sup}), score the likelihood
     of a future edge by their common neighbors — Adamic-Adar
@@ -2449,9 +2430,6 @@ def graph_link_prediction(
         .where(F.col("together") >= _LP_MIN_SUP)
         .select("p1", "p2")
     )
-    # checkpoint=False returns the fully lazy plan for plan audits.
-    if checkpoint:
-        cop = cop.persist()
     # r9 second pass (the _copurchase_pairs discipline applied to the
     # WEDGE enumeration): the Adamic-Adar weight depends only on the
     # CENTER's degree, so a wedge is just an unordered pair of the
@@ -2488,9 +2466,6 @@ def graph_link_prediction(
         .groupBy(F.col("e.node").alias("node"))
         .agg(F.sort_array(F.collect_set("e.nbr")).alias("nbrs"))
     )
-    if checkpoint:
-        nb = nb.persist()
-        nb.count()
     deg = nb.select("node", F.size("nbrs").alias("d"))
     # deg-1 centers can't form a wedge, and ln(1) = 0 would divide by
     # zero under ANSI mode (surfaced at sf10 — sf0.01's graph is dense
@@ -2539,11 +2514,9 @@ def graph_link_prediction(
         .orderBy(F.desc("aa_sum_nano"), F.desc("common"), "u", "v")
         .limit(20)
     )
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-        cop.unpersist()
-        nb.unpersist()
-    return out
+    with reused(cop, nb):
+        nb.count()
+        return cut_lineage(out)
 
 
 _EWMA_DEPTH = 8  # halving weights 2^7..2^0 over the last 8 days, sum 255
@@ -2780,9 +2753,7 @@ def _kcore_oracle() -> str:
 
 
 @query("graph_kcore", oracle=_kcore_oracle())
-def graph_kcore(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-CORE decomposition by iterative peeling (Matula-Beck / the
     Batagelj-Zaversnik census form): repeatedly delete nodes of degree
     < k from the co-purchase graph until the k-core remains, reporting
@@ -2810,39 +2781,34 @@ def graph_kcore(
     At 100 TB the first round dominates (it touches the full edge
     set); later rounds cost |core| alone."""
     li = load_table(spark, sf_dir, "lineitem")
-    edges = (
-        _copurchase_pairs(li)
-        .where(F.col("together") >= 2)
-        .select("p1", "p2")
+    edges = cut_lineage(
+        _copurchase_pairs(li).where(F.col("together") >= 2).select("p1", "p2"),
+        eager=False,
     )
-    if checkpoint:
-        edges = edges.localCheckpoint(eager=False)
     rounds = []
     for r in range(1, _KCORE_ROUNDS + 1):
         # r9: endpoint census as one explode pass over the round's edge
         # checkpoint instead of a two-branch self-union (one scan of
         # the checkpointed blocks per round, not two; same rows).
-        deg = (
+        # r9: deg roots THREE consumer branches per round (the p1
+        # semi-join, the p2 semi-join, the n_all/n_kept census);
+        # uncheckpointed, each branch re-ran the degree union+exchange
+        # against the round's edge blocks — 3 degree censuses per peel
+        # round. Checkpointing the (node, d) relation (one row per
+        # surviving node) computes it once.
+        deg = cut_lineage(
             edges.select(F.explode(F.array("p1", "p2")).alias("node"))
             .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
+            .agg(F.count(F.lit(1)).alias("d")),
+            eager=False,
         )
-        if checkpoint:
-            # r9: deg roots THREE consumer branches per round (the p1
-            # semi-join, the p2 semi-join, the n_all/n_kept census);
-            # uncheckpointed, each branch re-ran the degree
-            # union+exchange against the round's edge blocks — 3 degree
-            # censuses per peel round. Checkpointing the (node, d)
-            # relation (one row per surviving node) computes it once.
-            deg = deg.localCheckpoint(eager=False)
         kept = deg.where(F.col("d") >= _KCORE_K).select("node")
-        new_edges = (
+        new_edges = cut_lineage(
             edges.join(kept.withColumnRenamed("node", "p1"), "p1")
             .join(kept.withColumnRenamed("node", "p2"), "p2")
-            .select("p1", "p2")
+            .select("p1", "p2"),
+            eager=False,
         )
-        if checkpoint:
-            new_edges = new_edges.localCheckpoint(eager=False)
         # r9: n_kept and n_all come from ONE pass over deg (a count and
         # a conditional count are the same aggregate), instead of two
         # independent aggregate branches that each re-derived deg from
@@ -3056,9 +3022,7 @@ def _lpa_oracle() -> str:
 
 
 @query("graph_community_lpa", oracle=_lpa_oracle())
-def graph_community_lpa(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def graph_community_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LABEL-PROPAGATION community detection (Raghavan et al.) over the
     co-purchase graph, 3 unrolled SYNCHRONOUS rounds: every node adopts
     its neighbors' most frequent label (count DESC, then MIN label —
@@ -3079,13 +3043,10 @@ def graph_community_lpa(
     (node, label) count exchange and a per-node rank. Per-round cost
     is |edges| regardless of round number; rounds are a constant."""
     li = load_table(spark, sf_dir, "lineitem")
-    edges = (
-        _copurchase_pairs(li)
-        .where(F.col("together") >= 2)
-        .select("p1", "p2")
+    edges = cut_lineage(
+        _copurchase_pairs(li).where(F.col("together") >= 2).select("p1", "p2"),
+        eager=False,
     )
-    if checkpoint:
-        edges = edges.localCheckpoint(eager=False)
     # r9: the undirected edge list is the operand EVERY round joins on
     # dst — hash-partition it by dst ONCE and checkpoint that layout
     # (Dataset.localCheckpoint preserves outputPartitioning), so each
@@ -3111,13 +3072,13 @@ def graph_community_lpa(
         .select("e.src", "e.dst")
         .repartition("dst")
     )
-    if checkpoint:
-        und = und.localCheckpoint(eager=False)
-    labels = und.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
+    und = cut_lineage(und, eager=False)
+    labels = cut_lineage(
+        und.select(F.col("src").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("label")),
+        eager=False,
     )
-    if checkpoint:
-        labels = labels.localCheckpoint(eager=False)
     rounds = []
     for r in range(1, _LPA_ROUNDS + 1):
         cand = (
@@ -3133,11 +3094,12 @@ def graph_community_lpa(
         # label is identical; the window's per-partition sort and its
         # extra exchange-side row traffic go away (partial max_by
         # aggregates map-side into one row per node).
-        new_labels = cand.groupBy("node").agg(
-            F.expr("max_by(label, struct(c, -label))").alias("label")
+        new_labels = cut_lineage(
+            cand.groupBy("node").agg(
+                F.expr("max_by(label, struct(c, -label))").alias("label")
+            ),
+            eager=False,
         )
-        if checkpoint:
-            new_labels = new_labels.localCheckpoint(eager=False)
         # r9: changed-count and community-count fused into ONE pass over
         # the (new, previous) label join — a filtered count is a
         # conditional count, and the node-keyed join is 1:1 so the

@@ -51,7 +51,7 @@ from curatorhadoopinterface_spark.operators.textstats import (
     _FEAT_W_ORACLE,
     _FEAT_W_SPARK,
 )
-from curatorhadoopinterface_spark.session import load_table
+from curatorhadoopinterface_spark.session import cut_lineage, load_table, reused
 
 EVAL_MOD = 10  # doc_id % 10 == 0 -> held-out eval slice
 SEQ_BUDGET = 2048  # tokens per packed training sequence
@@ -430,9 +430,7 @@ PACK_BUCKET_DOCS = 1000  # docs per packing bucket (hierarchical variant)
     FROM packed GROUP BY lang, seq_id
     """,
 )
-def pack_sequences_hier(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def pack_sequences_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical sequence packing — BIT-IDENTICAL to pack_sequences
     (same oracle: the single global per-language window), with the
     single-language range chain broken.
@@ -475,8 +473,6 @@ def pack_sequences_hier(
     within = toks.withColumn(
         "within_before", F.coalesce(F.sum("n_tokens").over(ww), F.lit(0))
     )
-    if checkpoint:
-        within = within.persist()
     # per-bucket totals fall out of the SAME windowed pass; the prefix
     # offsets window over the |buckets|-row table (trivial) and broadcast
     wb = Window.partitionBy("lang").orderBy("bucket").rowsBetween(
@@ -500,12 +496,8 @@ def pack_sequences_hier(
         F.sum("n_tokens").alias("total_tokens"),
         (F.sum("n_tokens") / F.lit(SEQ_BUDGET)).alias("fill"),
     )
-    if not checkpoint:
-        # plan-audit path: expose the full (unpersisted) plan
-        return out
-    out = out.localCheckpoint(eager=True)  # fill report: |sequences| rows
-    within.unpersist()
-    return out
+    with reused(within):
+        return cut_lineage(out)  # fill report: |sequences| rows
 
 
 def _mix_pct_spark():

@@ -23,7 +23,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from curatorhadoopinterface_spark.operators import query
-from curatorhadoopinterface_spark.session import ensure_min_partitions, load_table
+from curatorhadoopinterface_spark.session import (
+    cut_lineage,
+    ensure_min_partitions,
+    load_table,
+    reused,
+)
 
 N_HASHES = 12
 BAND_SIZE = 3  # 4 bands of 3 rows; P(candidate) ~= 1-(1-J^3)^4
@@ -273,9 +278,7 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT * FROM cross_pairs UNION ALL SELECT * FROM within
     """,
 )
-def dedup_minhash_classes(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def dedup_minhash_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH near-dedup in CLASS form — the production default at
     high duplication (the sim_knn_classes re-plan applied to the minhash
     family, r7 verdict item 2): exact-duplicate classes (md5(text))
@@ -300,7 +303,7 @@ def dedup_minhash_classes(
     sf30 (SCALE.md r7). Joins: band self-join and verify pinned
     shuffle_hash (array-carrying relations mis-sized by the planner —
     the _minhash_core trap); class-size joins rep-keyed shuffled."""
-    classes, doc_agg, ver = _minhash_class_core(spark, sf_dir, checkpoint)
+    classes, doc_agg, ver = _minhash_class_core(spark, sf_dir)
     mem = classes.select("rep", "n_mem")
     cross = (
         ver.join(
@@ -346,7 +349,7 @@ def dedup_minhash_classes(
 
 
 def _minhash_class_core(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared class-form MinHash pipeline: exact-dup classes collapse
     first, signatures/bands/exact-Jaccard verify run over class
@@ -365,8 +368,7 @@ def _minhash_class_core(
     3.81 -> 3.29, dedup_minhash_classes neutral (2.30 tie). Distinct-
     content-bounded (signatures + shingle arrays of class reps), so —
     unlike the REVERTED corpus-wide ranked-shingle persist in
-    dedup_allpairs_prefix — the blocks stay small at any duplication.
-    ``checkpoint=False`` keeps the plan fully lazy for plan audits."""
+    dedup_allpairs_prefix — the blocks stay small at any duplication."""
     docs = load_table(spark, sf_dir, "documents")
     classes = docs.groupBy(F.md5("text").alias("ck")).agg(
         F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("n_mem")
@@ -375,11 +377,9 @@ def _minhash_class_core(
         classes.select(F.col("rep").alias("doc_id")).hint("shuffle_hash"),
         "doc_id",
     ).select("doc_id", "text")
-    doc_agg = _minhash_doc_agg_over(
-        shingle_explode(ensure_min_partitions(reps))
+    doc_agg = cut_lineage(
+        _minhash_doc_agg_over(shingle_explode(ensure_min_partitions(reps)))
     )
-    if checkpoint:
-        doc_agg = doc_agg.localCheckpoint(eager=True)
     bands = _band_explode(doc_agg)
     a, b = bands.alias("a"), bands.alias("b").hint("shuffle_hash")
     cands = (
@@ -867,61 +867,64 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    sym.persist()
-    # r9 round re-plan, part 1: round 0 needs NO join — every initial
-    # label is the node's own id, so min over neighbors∪self is
-    # least(src, min(dst)) straight off the symmetric edge list. ONE
-    # aggregate replaces the old init (node-list distinct exchange)
-    # PLUS the old first join+propagate round; the chg flag
-    # (min nbr id < own id) matches the generic round's exactly.
-    labels = (
-        sym.groupBy(F.col("src").alias("node"))
-        .agg(F.min("dst").alias("mn"))
-        .select(
-            "node",
-            F.least("node", "mn").alias("comp"),
-            (F.col("mn") < F.col("node")).alias("chg"),
-        )
-    )
-    labels = labels.localCheckpoint(eager=True)
-    changed = labels.filter("chg").limit(1).count()
-    labels = labels.drop("chg")
-    # r9 round re-plan, part 2: the old generic round was TWO keyed
-    # joins (sym⋈labels -> per-src min, then labels⋈nbr_min to apply
-    # least() and derive the changed flag) — 4 exchange sides per
-    # round. The same fixpoint step is ONE join + ONE aggregate: union
-    # the propagated neighbor labels with a marker-tagged self row per
-    # node and take min(comp) plus max(own comp) in a single groupBy —
-    # min(nbrs ∪ self) IS least(comp, min nbr), and comp < old_comp IS
-    # the old chg flag (nodes with no neighbors only carry their self
-    # row: comp = old, chg = false, exactly the old left-join null
-    # path). Values are untouched; only the exchange count drops.
-    for _ in range(max_iter - 1):
-        if changed == 0:
-            break
-        prop = sym.join(labels, sym.dst == labels.node).select(
-            F.col("src").alias("node"), "comp", F.lit(0).alias("own")
-        )
-        new_labels = (
-            prop.unionByName(
-                labels.select("node", "comp", F.lit(1).alias("own"))
-            )
-            .groupBy("node")
-            .agg(
-                F.min("comp").alias("comp"),
-                F.max(F.when(F.col("own") == 1, F.col("comp"))).alias(
-                    "old_comp"
-                ),
-            )
+    # the per-round cuts below are direct localCheckpoints, not
+    # cut_lineage: the round count depends on the data, so they must hold
+    # under lazy_plans() too (each round's plan would otherwise nest
+    # every previous round)
+    with reused(sym):
+        # r9 round re-plan, part 1: round 0 needs NO join — every initial
+        # label is the node's own id, so min over neighbors∪self is
+        # least(src, min(dst)) straight off the symmetric edge list. ONE
+        # aggregate replaces the old init (node-list distinct exchange)
+        # PLUS the old first join+propagate round; the chg flag
+        # (min nbr id < own id) matches the generic round's exactly.
+        labels = (
+            sym.groupBy(F.col("src").alias("node"))
+            .agg(F.min("dst").alias("mn"))
             .select(
-                "node", "comp", (F.col("comp") < F.col("old_comp")).alias("chg")
+                "node",
+                F.least("node", "mn").alias("comp"),
+                (F.col("mn") < F.col("node")).alias("chg"),
             )
         )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = new_labels.filter("chg").limit(1).count()
-        labels = new_labels.drop("chg")
-    sym.unpersist()
-    return labels
+        labels = labels.localCheckpoint(eager=True)
+        changed = labels.filter("chg").limit(1).count()
+        labels = labels.drop("chg")
+        # r9 round re-plan, part 2: the old generic round was TWO keyed
+        # joins (sym⋈labels -> per-src min, then labels⋈nbr_min to apply
+        # least() and derive the changed flag) — 4 exchange sides per
+        # round. The same fixpoint step is ONE join + ONE aggregate: union
+        # the propagated neighbor labels with a marker-tagged self row per
+        # node and take min(comp) plus max(own comp) in a single groupBy —
+        # min(nbrs ∪ self) IS least(comp, min nbr), and comp < old_comp IS
+        # the old chg flag (nodes with no neighbors only carry their self
+        # row: comp = old, chg = false, exactly the old left-join null
+        # path). Values are untouched; only the exchange count drops.
+        for _ in range(max_iter - 1):
+            if changed == 0:
+                break
+            prop = sym.join(labels, sym.dst == labels.node).select(
+                F.col("src").alias("node"), "comp", F.lit(0).alias("own")
+            )
+            new_labels = (
+                prop.unionByName(
+                    labels.select("node", "comp", F.lit(1).alias("own"))
+                )
+                .groupBy("node")
+                .agg(
+                    F.min("comp").alias("comp"),
+                    F.max(F.when(F.col("own") == 1, F.col("comp"))).alias(
+                        "old_comp"
+                    ),
+                )
+                .select(
+                    "node", "comp", (F.col("comp") < F.col("old_comp")).alias("chg")
+                )
+            )
+            new_labels = new_labels.localCheckpoint(eager=True)
+            changed = new_labels.filter("chg").limit(1).count()
+            labels = new_labels.drop("chg")
+        return labels
 
 
 @query(
@@ -1068,9 +1071,7 @@ _O_TUNE_BANDS = " UNION ALL ".join(_o_band_cfg(b, r) for b, r in TUNE_CONFIGS)
     WHERE COALESCE(cc.n_c, 0) + w.n_w > 0
     """,
 )
-def dedup_minhash_tuning(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def dedup_minhash_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH band-tuning report: the SAME 12 minhashes regrouped as
     (2 bands x 6 rows), (4 x 3), (6 x 2), with candidate volume,
     verified-duplicate count, and precision per configuration — the
@@ -1100,7 +1101,7 @@ def dedup_minhash_tuning(
     duplication factor. At 100 TB you run exactly this to pick b/r
     before committing the full corpus pass.
     """
-    classes, doc_agg, _ver = _minhash_class_core(spark, sf_dir, checkpoint)
+    classes, doc_agg, _ver = _minhash_class_core(spark, sf_dir)
     sets = doc_agg.select("doc_id", "s").hint("shuffle_hash")
     jac = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s"))) / F.size(
         F.array_union(F.col("sa.s"), F.col("sb.s"))
@@ -1736,9 +1737,7 @@ def dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m, e, b
     """,
 )
-def dedup_method_agreement(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Surface-vs-semantic dedup agreement census: the pair-set overlap
     between MinHash+LSH verified near-dups (text 3-shingles) and
     embedding-space near-dups (sign-LSH + cosine) over the SAME corpus
@@ -1782,10 +1781,6 @@ def dedup_method_agreement(
     # (interleaved A/B: 4.17 s lazy vs 3.38 s persisted, min-of-3).
     # Persist both candidate-bounded pair sets, eagerly checkpoint the
     # 1-row report, unpersist before return (the batch-5 pattern).
-    # checkpoint=False returns the fully lazy plan for plan audits.
-    if checkpoint:
-        pm = pm.persist()
-        pe = pe.persist()
     both = pm.join(pe, ["doc_a", "doc_b"])
     out = (
         pm.agg(F.count(F.lit(1)).alias("n_minhash_pairs"))
@@ -1802,12 +1797,8 @@ def dedup_method_agreement(
             ).alias("agreement_permille"),
         )
     )
-    if not checkpoint:
-        return out
-    out = out.localCheckpoint(eager=True)
-    pm.unpersist()
-    pe.unpersist()
-    return out
+    with reused(pm, pe):
+        return cut_lineage(out)
 
 
 # -- asymmetric containment (quote / excerpt detection) ------------------------
@@ -2081,9 +2072,7 @@ RECALL_DF_CAP = 64
     FROM tot, hit, nhot
     """,
 )
-def dedup_minhash_recall(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MEASURED recall of the MinHash+LSH candidate stage against exact
     ground truth on a 10% deterministic doc sample: of the pairs whose
     true shingle Jaccard clears the verify threshold, how many does the
@@ -2115,11 +2104,8 @@ def dedup_minhash_recall(
     re-derives the whole scan+shingle+signature pipeline per consumer
     (~26 duplicate scans measured). ``localCheckpoint`` materializes it
     once — the dedup_fuzzy_edit/graph_pagerank pattern; corpus-sized
-    but compact (signatures + distinct shingles), disk-spillable.
-    ``checkpoint=False`` returns the fully lazy plan for plan audits."""
-    doc_agg = _minhash_doc_agg(spark, sf_dir)
-    if checkpoint:
-        doc_agg = doc_agg.localCheckpoint(eager=True)
+    but compact (signatures + distinct shingles), disk-spillable."""
+    doc_agg = cut_lineage(_minhash_doc_agg(spark, sf_dir))
     bands = _band_explode(doc_agg)
     a, b = bands.alias("a"), bands.alias("b")
     cands = (
@@ -2293,9 +2279,7 @@ def dedup_minhash_recall(
     FROM within_stats w CROSS JOIN cross_stats x
     """,
 )
-def dedup_containment_classes(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def dedup_containment_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-CLASS form of dedup_containment_census: exact-duplicate
     classes (md5 of text) collapse first, LSH + containment verify runs
     ONCE per class representative, and pair counts come from class
@@ -2329,9 +2313,8 @@ def dedup_containment_classes(
     # discipline; its lazy `ver` branch is unused here and costs
     # nothing), and checkpoint the narrow classes relation for its
     # three remaining consumers (mem x2, within_stats).
-    classes, rep_agg, _ver = _minhash_class_core(spark, sf_dir, checkpoint)
-    if checkpoint:
-        classes = classes.localCheckpoint(eager=True)
+    classes, rep_agg, _ver = _minhash_class_core(spark, sf_dir)
+    classes = cut_lineage(classes)
     bands = _band_explode(rep_agg)
     a, b = bands.alias("a"), bands.alias("b").hint("shuffle_hash")
     ccands = (
@@ -2482,9 +2465,7 @@ _AP_T_PERMILLE = 500  # Jaccard threshold 0.5
     FROM wth w CROSS JOIN cc CROSS JOIN agg a
     """,
 )
-def dedup_allpairs_prefix(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def dedup_allpairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT similarity self-join via ALLPAIRS PREFIX FILTERING
     (Bayardo et al.) at Jaccard >= 0.5 — the deterministic complement
     to dedup_minhash's probabilistic LSH: zero false negatives BY
@@ -2536,9 +2517,7 @@ def dedup_allpairs_prefix(
     # bounded (the batch-16 keep shape, NOT the rejected corpus-wide
     # ranked-shingle persist): eager checkpoint measured 5.41/5.50/5.49
     # lazy vs 5.06/5.09/5.35 checkpointed (alternating, min-of-3 x3).
-    # checkpoint=False keeps the lazy plan for audits.
-    if checkpoint:
-        classes = classes.localCheckpoint(eager=True)
+    classes = cut_lineage(classes)
     reps = docs.join(
         classes.select(F.col("rep").alias("doc_id")).hint("shuffle_hash"),
         "doc_id",
@@ -3016,9 +2995,7 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN cstat s ON s.cluster_id = p.cluster_id
     """,
 )
-def dedup_clusters_classes(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def dedup_clusters_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster resolution in CLASS form — the production
     default at high duplication (the same re-plan law as
     dedup_minhash_classes/sim_knn_classes, applied to connected
@@ -3043,7 +3020,7 @@ def dedup_clusters_classes(
     now walks the REP graph (tiny), so the class form is strict-
     verifiable at sf10 where the pair form needed a tier-3 invariant
     check (oracle-side >90 GB)."""
-    classes, doc_agg, ver = _minhash_class_core(spark, sf_dir, checkpoint)
+    classes, doc_agg, ver = _minhash_class_core(spark, sf_dir)
     labels = _class_components(classes, doc_agg, ver)
     cstat = (
         labels.join(classes, labels.node == classes.rep)
@@ -3161,9 +3138,7 @@ def _class_components(
     FROM ranked GROUP BY cluster_id
     """,
 )
-def dedup_keep_best_classes(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def dedup_keep_best_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware canonical selection in CLASS form — dedup_keep_best
     re-planned collapse-first: components run over class
     representatives (_class_components), the quality score is computed
@@ -3183,7 +3158,7 @@ def dedup_keep_best_classes(
     invariant."""
     from curatorhadoopinterface_spark.operators.textstats import _FEAT_W_SPARK
 
-    classes, doc_agg, ver = _minhash_class_core(spark, sf_dir, checkpoint)
+    classes, doc_agg, ver = _minhash_class_core(spark, sf_dir)
     labels = _class_components(classes, doc_agg, ver)
     docs = load_table(spark, sf_dir, "documents")
     reps = docs.join(

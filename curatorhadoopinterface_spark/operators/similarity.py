@@ -38,7 +38,7 @@ from curatorhadoopinterface_spark.functions.vec import (
     dot_float_as_double,
 )
 from curatorhadoopinterface_spark.operators import query
-from curatorhadoopinterface_spark.session import load_table
+from curatorhadoopinterface_spark.session import cut_lineage, load_table
 
 _DIM = 64  # embeddings fixture dimension (FIXTURES.md)
 
@@ -804,9 +804,7 @@ def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY t.n_vectors, c.n_classes, c.within_pairs, m.n_rep_mutual
     """,
 )
-def sim_knn_classes(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def sim_knn_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN graph, PRODUCTION DEFAULT — reach for this one first; the
     pair-shaped sim_knn_graph (above) is the diagnostic for corpora its
     dup_factor_permille column already certifies as deduplicated.
@@ -848,10 +846,8 @@ def sim_knn_classes(
     # lookups, cstat) — uncheckpointed, each re-ran the emb scan +
     # class-key exchange (the batch-10 _minhash_class_core finding in
     # vector space). Distinct-content-bounded and narrow, so safe to
-    # materialize once. checkpoint=False keeps the lazy plan for
-    # audits.
-    if checkpoint:
-        classes = classes.localCheckpoint(eager=True)
+    # materialize once.
+    classes = cut_lineage(classes)
     reps = emb.join(
         classes.select(F.col("rep").alias("vec_id")).hint("shuffle_hash"),
         "vec_id",

@@ -14,7 +14,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from curatorhadoopinterface_spark.operators import query
-from curatorhadoopinterface_spark.session import ensure_min_partitions, load_table
+from curatorhadoopinterface_spark.session import (
+    cut_lineage,
+    ensure_min_partitions,
+    load_table,
+    reused,
+)
 
 # shared oracle CTE: whitespace tokens with half-open char offsets
 _WS_TOKS_CTE = """
@@ -768,9 +773,7 @@ def annotate_crossdoc_coref(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
 )
-def annotate_entity_pmi(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def annotate_entity_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Annotation -> analytics COMPOSITION (the reference's job-chaining
     A11 exercised end-to-end): run the NER annotator (the real Arrow
     mapInPandas stage, BIO spans merged), extract each span's SURFACE
@@ -808,9 +811,6 @@ def annotate_entity_pmi(
             F.expr("substring(raw_text, sp.start + 1, sp.ending - sp.start)")
         ).alias("surface"),
     ).distinct()
-    # checkpoint=False returns the fully lazy plan for plan audits.
-    if checkpoint:
-        ents = ents.persist()
     marg = ents.groupBy("surface").agg(F.count(F.lit(1)).alias("n_s"))
     n = ents.agg(F.countDistinct("doc_id").alias("n_docs"))
     pairs = (
@@ -847,7 +847,5 @@ def annotate_entity_pmi(
         .orderBy(F.desc("pmi_nano"), "ent_a", "ent_b")
         .limit(20)
     )
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-        ents.unpersist()
-    return out
+    with reused(ents):
+        return cut_lineage(out)

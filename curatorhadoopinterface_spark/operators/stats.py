@@ -33,7 +33,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from curatorhadoopinterface_spark.operators import query
-from curatorhadoopinterface_spark.session import ensure_min_partitions, load_table
+from curatorhadoopinterface_spark.session import (
+    cut_lineage,
+    ensure_min_partitions,
+    load_table,
+    reused,
+)
 
 # --------------------------------------------------------------------------
 # shared fixed-point constants (identical literals reach both engines)
@@ -820,9 +825,7 @@ _NOVEL_K = 5  # words per shingle
     FROM per_doc GROUP BY source ORDER BY source
     """,
 )
-def text_ngram_novelty(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-GRAM NOVELTY scoring: per source, the share of distinct
     5-word shingles whose FIRST occurrence (min doc_id = ingest order)
     lands in that source's documents — the first-occurrence
@@ -862,10 +865,7 @@ def text_ngram_novelty(
     # CPU-dense transform+array_distinct map stage. Persist the per-doc
     # shingle sets for the duration of the query (alternating A/B at
     # sf0.1: 4.65 -> 3.06 s min-of-4), eagerly checkpoint the 3-row
-    # report, unpersist before return. checkpoint=False keeps the plan
-    # fully lazy for plan audits.
-    if checkpoint:
-        sh = sh.persist()
+    # report, unpersist before return.
     exploded = sh.select("doc_id", F.explode("sset").alias("shingle"))
     firsts = exploded.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     novel = firsts.groupBy(F.col("first_doc").alias("doc_id")).agg(
@@ -888,11 +888,8 @@ def text_ngram_novelty(
         )
         .orderBy("source")
     )
-    if not checkpoint:
-        return out
-    out = out.localCheckpoint(eager=True)
-    sh.unpersist()
-    return out
+    with reused(sh):
+        return cut_lineage(out)
 
 
 # --------------------------------------------------------------------------

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
 from curatorhadoopinterface_spark.operators import query
-from curatorhadoopinterface_spark.session import load_table
+from curatorhadoopinterface_spark.session import load_table, reused
 
 # Tiny per-language stopword profiles (public-knowledge closed classes).
 PROFILES: dict[str, tuple[str, ...]] = {
@@ -1022,40 +1022,40 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(
             F.lit("|"), F.array_join(F.split("w", ""), "||"), F.lit("|")
         ).alias("seq"),
-    ).persist()
-    vocab = vocab0
-    merges = []
-    for k in range(1, _N_BPE_ROUNDS + 1):
-        syms = vocab.select(
-            "freq",
-            F.split(
-                F.expr("substring(seq, 2, length(seq) - 2)"), r"\|\|"
-            ).alias("s"),
-        )
-        pairs = syms.filter(F.size("s") >= 2).select(
-            "freq",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(s) - 1),"
-                    " i -> struct(element_at(s, i) AS l,"
-                    " element_at(s, i + 1) AS r))"
-                )
-            ).alias("pr"),
-        )
-        counted = pairs.groupBy("pr.l", "pr.r").agg(F.sum("freq").alias("n"))
-        # argmax as TakeOrderedAndProject -> exactly one driver row
-        best = counted.orderBy(F.desc("n"), F.asc("l"), F.asc("r")).limit(1).collect()[0]
-        l, r, n = best["l"], best["r"], best["n"]
-        vocab = vocab.select(
-            "freq",
-            F.replace(
-                F.col("seq"),
-                F.concat(F.lit("|"), F.lit(l), F.lit("||"), F.lit(r), F.lit("|")),
-                F.concat(F.lit("|"), F.lit(l + r), F.lit("|")),
-            ).alias("seq"),
-        )
-        merges.append((k, l, r, l + r, n))
-    vocab0.unpersist()
+    )
+    with reused(vocab0):
+        vocab = vocab0
+        merges = []
+        for k in range(1, _N_BPE_ROUNDS + 1):
+            syms = vocab.select(
+                "freq",
+                F.split(
+                    F.expr("substring(seq, 2, length(seq) - 2)"), r"\|\|"
+                ).alias("s"),
+            )
+            pairs = syms.filter(F.size("s") >= 2).select(
+                "freq",
+                F.explode(
+                    F.expr(
+                        "transform(sequence(1, size(s) - 1),"
+                        " i -> struct(element_at(s, i) AS l,"
+                        " element_at(s, i + 1) AS r))"
+                    )
+                ).alias("pr"),
+            )
+            counted = pairs.groupBy("pr.l", "pr.r").agg(F.sum("freq").alias("n"))
+            # argmax as TakeOrderedAndProject -> exactly one driver row
+            best = counted.orderBy(F.desc("n"), F.asc("l"), F.asc("r")).limit(1).collect()[0]
+            l, r, n = best["l"], best["r"], best["n"]
+            vocab = vocab.select(
+                "freq",
+                F.replace(
+                    F.col("seq"),
+                    F.concat(F.lit("|"), F.lit(l), F.lit("||"), F.lit(r), F.lit("|")),
+                    F.concat(F.lit("|"), F.lit(l + r), F.lit("|")),
+                ).alias("seq"),
+            )
+            merges.append((k, l, r, l + r, n))
     return spark.createDataFrame(
         merges,
         "merge_rank int, left_sym string, right_sym string, merged string, pair_freq bigint",

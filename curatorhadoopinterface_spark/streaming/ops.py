@@ -927,7 +927,7 @@ def stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from curatorhadoopinterface_spark.operators.dedup import shingle_explode
-    from curatorhadoopinterface_spark.session import load_table
+    from curatorhadoopinterface_spark.session import load_table, reused
 
     base = proc_scratch("stream_contam")
     shutil.rmtree(base, ignore_errors=True)
@@ -952,9 +952,7 @@ def stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_explode(docs.filter(F.col("doc_id") % 10 == 0))
         .select("shingle")
         .distinct()
-        .persist()
     )
-    eval_rel.count()
     eval_sh = F.broadcast(eval_rel)
     schema = spark.read.parquet(staged).schema
     src = (
@@ -964,18 +962,19 @@ def stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     arriving = shingle_explode(src.filter(F.col("doc_id") % 10 != 0), "lang")
     hits = arriving.join(eval_sh, "shingle")
-    with stream_width(spark):
-        q = (
-            hits.select("doc_id", "lang", "shingle")
-            .writeStream.format("parquet")
-            .option("path", store)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain_query(q)
-    eval_rel.unpersist()
+    with reused(eval_rel):
+        eval_rel.count()
+        with stream_width(spark):
+            q = (
+                hits.select("doc_id", "lang", "shingle")
+                .writeStream.format("parquet")
+                .option("path", store)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            drain_query(q)
     back = spark.read.parquet(store)
     return back.groupBy("lang").agg(
         F.countDistinct("doc_id").alias("n_contaminated_docs"),

@@ -97,26 +97,28 @@ def test_fuzzy_edit_finds_planted_near_dup_only(spark):
     assert pairs == {(1, 2)}
 
 
-def test_fuzzy_edit_checkpoint_gate_branches_agree(spark):
-    """The size-gated rep-pair barrier (checkpoint=None picks a branch
-    by corpus row count) must be a pure physical choice: forced-on,
-    forced-off, and auto all emit the identical pair set and distances."""
-    from curatorhadoopinterface_spark.operators.analytics import (
-        FUZZY_CHECKPOINT_MIN_DOCS,
-        dedup_fuzzy_edit,
-    )
+def test_fuzzy_edit_checkpoint_gate_branches_agree(spark, sf_dir, monkeypatch):
+    """The size-gated rep-pair barrier (picked by corpus row count) must
+    be a pure physical choice: the barrier branch (gate forced to 0),
+    the default (sf0.001 sits below the gate: lazy) and the lazy_plans()
+    form all emit the identical pair set and distances."""
+    from curatorhadoopinterface_spark.operators import analytics
+    from curatorhadoopinterface_spark.session import lazy_plans
 
-    sf_dir = "/root/testdata/sf0.001"
-    runs = {
-        mode: sorted(
+    def pairs():
+        return sorted(
             (r["doc_id"], r["dup_id"], r["edit_dist"])
-            for r in dedup_fuzzy_edit(spark, sf_dir, checkpoint=mode).collect()
+            for r in analytics.dedup_fuzzy_edit(spark, sf_dir).collect()
         )
-        for mode in (True, False, None)
-    }
-    assert runs[True] == runs[False] == runs[None]
-    # the sf0.001 fixture sits far below the gate: auto means lazy here
-    assert FUZZY_CHECKPOINT_MIN_DOCS > 1_000
+
+    # the sf0.001 fixture sits far below the gate: the default is lazy
+    assert analytics.FUZZY_CHECKPOINT_MIN_DOCS > 1_000
+    default = pairs()
+    with lazy_plans():
+        lazy = pairs()
+    monkeypatch.setattr(analytics, "FUZZY_CHECKPOINT_MIN_DOCS", 0)
+    barrier = pairs()
+    assert barrier == default == lazy
 
 
 def test_native_array_collect_and_percentile(spark):

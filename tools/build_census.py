@@ -22,13 +22,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     args = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--sf-dir":
-            sf_dir = args[i + 1]; i += 2
-        else:
-            names.append(args[i]); i += 1
+    if "--sf-dir" in args:
+        i = args.index("--sf-dir")
+        if i + 1 == len(args):
+            sys.exit("usage: build_census.py [--sf-dir DIR] [name ...]")
+        sf_dir = args.pop(i + 1)
+        args.pop(i)
+    names = args
 
     from curatorhadoopinterface_spark.session import get_spark
     import __spark_entry__ as entrymod
@@ -36,19 +36,19 @@ def main() -> None:
     spark = get_spark("build_census")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-    if not names:
-        names = list(qs)
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        print(f"warning: unknown queries skipped: {unknown}", file=sys.stderr)
+    names = [n for n in names if n in qs] if names else list(qs)
 
     # warm JVM + Python worker pool
-    qs["flagship_pricing_summary"](spark, sf_dir).write.mode("overwrite").format("noop").save()
+    next(iter(qs.values()))(spark, sf_dir).write.mode("overwrite").format("noop").save()
     spark.range(64).repartition(64).mapInPandas(
         lambda it: (pdf for pdf in it), "id long"
     ).write.mode("overwrite").format("noop").save()
 
     rows = []
     for name in names:
-        if name not in qs:
-            continue
         t0 = time.time()
         df = qs[name](spark, sf_dir)
         t1 = time.time()

@@ -11,6 +11,9 @@ For each audited query this checks the formatted physical plan for:
     side and says so below);
   - WholeStageCodegen spans exist (the JVM hot path is codegen'd).
 
+Every query is built inside ``session.lazy_plans()``, so builders that
+materialize (persist / localCheckpoint) return their full lazy plan.
+
 Usage: python tools/plan_audit.py [sf_dir]   (writes PLANS.md)
 """
 
@@ -892,7 +895,7 @@ AUDITS: dict[str, dict] = {
     "join_existence_bloom": {"partial": True, "no_bnlj": False,
                              "require": [r"BroadcastHashJoin"],
                              "prune": ["o_comment", "l_comment"]},
-    # k-core peel (audited with checkpoint=False): keyed equi joins
+    # k-core peel (audited lazy): keyed equi joins
     # only; degree census partial-aggregates before its exchange
     "graph_kcore": {"partial": True, "no_bnlj": False,
                     "prune": ["l_comment", "l_quantity"]},
@@ -1006,7 +1009,7 @@ AUDITS: dict[str, dict] = {
     "sample_coherent": {"partial": True, "no_bnlj": False,
                         "prune": ["o_comment", "c_comment", "c_acctbal"],
                         "forbid": [r"CartesianProduct"]},
-    # LPA (audited with checkpoint=False): pair-gen is the order-bounded
+    # LPA (audited lazy): pair-gen is the order-bounded
     # basket self-join; each round a keyed equi join + partial-agged
     # (node, label) count + per-node rank
     "graph_community_lpa": {"partial": True, "no_bnlj": False,
@@ -1203,9 +1206,8 @@ AUDITS["dedup_span_removal"] = {
     "prune": ["doc_id", "lang", "n_chars"],
     "forbid": [r"CartesianProduct", r"BroadcastNestedLoopJoin"],
 }
-# iterative hash-to-min propagation over CLASS reps: persists +
-# localCheckpoints per round like graph_pagerank — audited with
-# checkpoint-free plans via the same by-name exemption path
+# iterative hash-to-min propagation over CLASS reps (a data-dependent
+# fixpoint, so its per-round localCheckpoints hold even in the lazy form)
 AUDITS["dedup_clusters_classes"] = {
     "partial": True,
     "forbid": [r"CartesianProduct"],
@@ -1266,10 +1268,12 @@ def coverage_gaps(registry_names) -> tuple[list[str], list[str]]:
 
 
 def plan_of(df) -> str:
+    """Formatted physical plan with expression (``#123``), exchange plan
+    and RDD IDs normalized, so dumps of the same plan diff clean."""
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    return re.sub(r"(#|plan_id=|RDD\[)\d+", r"\1N", buf.getvalue())
 
 
 def audit(name: str, plan: str, spec: dict) -> list[str]:
@@ -1323,7 +1327,7 @@ def main() -> None:
         append_names = argv[i + 1 :]
         argv = argv[:i]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    from curatorhadoopinterface_spark.session import get_spark
+    from curatorhadoopinterface_spark.session import get_spark, lazy_plans
     import __spark_entry__ as entrymod
 
     spark = get_spark("plan-audit")
@@ -1347,21 +1351,9 @@ def main() -> None:
             continue
         if append_names and name not in append_names:
             continue
-        if name in ("graph_pagerank", "pack_sequences_hier",
-                    "dedup_fuzzy_edit", "dedup_minhash_recall",
-                    "graph_triangles", "graph_kcore",
-                    "graph_community_lpa", "dedup_method_agreement",
-                    "dedup_minhash_classes", "dedup_minhash_tuning",
-                    "dedup_clusters_classes", "dedup_keep_best_classes",
-                    "text_ngram_novelty", "graph_link_prediction",
-                    "annotate_entity_pmi", "sim_knn_classes",
-                    "dedup_containment_classes",
-                    "dedup_allpairs_prefix"):
-            # audit the full plan, not the post-checkpoint scan stub
-            df = qs[name](spark, sf_dir, checkpoint=False)
-        else:
-            df = qs[name](spark, sf_dir)
-        plan = plan_of(df)
+        # audit the full plan, not a post-checkpoint scan stub
+        with lazy_plans():
+            plan = plan_of(qs[name](spark, sf_dir))
         problems = audit(name, plan, spec)
         status = "PASS" if not problems else "FAIL: " + "; ".join(problems)
         print(f"[{status.split(':')[0]}] {name}" + ("" if not problems else f" — {problems}"))
