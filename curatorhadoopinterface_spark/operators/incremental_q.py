@@ -258,18 +258,19 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_provide_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's WHOLE memoized loop (A18-A21) as one checked run:
     batch 1 annotates half the corpus into a fresh record store; batch 2
-    submits the FULL corpus — the first half anti-joins into cache hits
-    (their stored views are reused, per CuratorHandler.getRecord
-    :468-527 semantics), only the new half pays the annotation UDF; the
-    enriched records upsert back by view count (A18). The census the
-    oracle checks is read BACK from the store, so hit reuse, miss
-    annotation, and the upsert all had to compose correctly for the
-    token totals to match the SQL twin.
+    submits the FULL corpus — the first half joins to its stored views
+    (cache hits, per CuratorHandler.getRecord :468-527 semantics) and
+    only the new half has views to compute; the enriched records upsert
+    back by view count (A18). The census the oracle checks is read BACK
+    from the store, so hit reuse, miss annotation, and the upsert all
+    had to compose correctly for the token totals to match the SQL twin.
 
-    Scale shape: the cache path is an identifier-keyed anti/semi join
-    against the bucketed store (SURVEY §1.4 record-store row); only
-    misses enter the fused mapInPandas stage, so incremental cost
-    tracks NEW data — the entire point of the reference's architecture.
+    Scale shape: the cache path is ONE identifier-keyed left join
+    against the bucketed store (SURVEY §1.4 record-store row), then ONE
+    fused mapInPandas pass over the whole batch. Every row crosses the
+    worker, but a hit's annotators are skipped per view, so annotation
+    cost tracks NEW data — the entire point of the reference's
+    architecture.
     """
     import os
     import shutil

@@ -2,8 +2,8 @@
 cascading invalidation, view-count upsert (SURVEY.md A18-A23).
 
 Reference semantics being reproduced:
-- archive keyed by ``Identifier.getId(text)``; cache hit skips
-  annotation (CuratorHandler.getRecord, :468-527)            -> anti-join
+- archive keyed by ``Identifier.getId(text)``, one record each; a cache
+  hit reuses its views (CuratorHandler.getRecord, :468-527)  -> left join
 - a view is stale iff its ``source`` version is older than the live
   annotator's (updateRequired, :816-896)                     -> version expr
 - removing a stale view removes all transitive dependents
@@ -17,9 +17,9 @@ from the static mode registry — no Python round-trip.
 
 Scale: the store is Parquet partitioned by the first hex char of the
 SHA-1 identifier (16 uniform buckets; raise to 2 chars = 256 at real
-scale). Upserts use dynamic partition overwrite so only touched buckets
-rewrite — the non-ACID-safe but deterministic batch equivalent of the
-reference's DB upsert.
+scale). Upserts overwrite only the touched buckets (a dynamic partition
+overwrite set on that one write, not on the session) — the non-ACID-safe
+but deterministic batch equivalent of the reference's DB upsert.
 """
 
 from __future__ import annotations
@@ -125,8 +125,6 @@ class RecordStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        # only touched buckets rewrite on upsert
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def load(self) -> DataFrame | None:
         try:
@@ -143,13 +141,14 @@ class RecordStore:
 
     def upsert(self, records: DataFrame, force: bool = False) -> None:
         """A18: replace a stored record only if the new copy has MORE
-        views; insert unseen records. Only touched hash buckets rewrite
-        (dynamic partition overwrite).
+        views; insert unseen records; keep one copy per identifier (copies
+        share their text). Only touched hash buckets rewrite.
 
         ``force=True`` (the forceUpdate path): a freshly recomputed record
         has the SAME view count as its cached copy, so the count rule
         would keep the stale one — prefer the new copy whenever present.
         """
+        records = records.dropDuplicates(["identifier"])
         stored = self.load()
         if stored is None:
             self.write_full(records)
@@ -189,7 +188,10 @@ class RecordStore:
         picked = (
             new.drop("__n_new")
             .join(win_new, "identifier", "left_semi")
-            .unionByName(old.drop("__n_old").join(win_old, "identifier", "left_semi"))
+            .unionByName(
+                old.drop("__n_old").join(win_old, "identifier", "left_semi"),
+                allowMissingColumns=True,
+            )
         )
         # the merge plan READS the store files this write deletes:
         # materialize to a STAGING dir and cut lineage by reading it
@@ -217,9 +219,9 @@ class RecordStore:
             _shutil.rmtree(staging, ignore_errors=True)
             picked.write.parquet(staging)
             picked = self.spark.read.parquet(staging)
-            self._bucketed(picked).write.mode("overwrite").partitionBy(
-                _BUCKET_COL
-            ).parquet(self.path)
+            self._bucketed(picked).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy(_BUCKET_COL).parquet(self.path)
         finally:
             # remove staging on failure too — a failed final overwrite
             # must not leak a full wide copy of the store (r8 ADVICE)
@@ -234,10 +236,12 @@ class RecordStore:
         force_start: str | None = None,
         best_effort: bool = False,
     ) -> DataFrame:
-        """The full memoized pipeline (A20+A21): stale-invalidate cached
-        copies, reuse them for cache hits, annotate only what's missing
-        (per-row), upsert enriched records back. Returns the annotated
-        corpus for ``new_records``.
+        """The full memoized pipeline (A20+A21) in one annotation pass.
+        Every input row takes its identifier's stored, stale-invalidated
+        views when the store holds it (a cache hit) and its own views
+        otherwise; ONE :func:`provide` over that batch computes only
+        what each row is missing, and the result is upserted back.
+        Returns one annotated record per input row.
 
         ``force=True`` is the per-call forceUpdate of the reference's
         provide (curator.thrift:66): cached TARGET views are recomputed
@@ -249,29 +253,21 @@ class RecordStore:
         A forced record has the same view count as its cached copy, so
         the upsert must prefer-new whenever any recompute was requested.
         """
-        any_force = force or force_start is not None
+        batch = new_records
         stored = self.load()
-        if stored is None:
-            annotated = provide(
-                new_records,
-                target,
-                force=force,
-                force_start=force_start,
-                best_effort=best_effort,
-            )
-            self.upsert(annotated, force=any_force)
-            return annotated
-        stored = remove_stale_views(stored)
-        ids = new_records.select("identifier").distinct()
-        hits = stored.join(ids, "identifier", "left_semi")
-        misses = new_records.join(stored, "identifier", "left_anti")
-        # provide() is per-row memoized: hits recompute only dropped/missing
-        # views, misses compute everything — in ONE fused pass each.
-        kw = dict(force=force, force_start=force_start, best_effort=best_effort)
-        annotated = provide(misses, target, **kw).unionByName(
-            provide(hits, target, **kw), allowMissingColumns=True
+        if stored is not None:
+            memo = remove_stale_views(stored)
+            views = [c for c in VIEW_COLS if c in memo.columns]
+            memo = memo.select("identifier", *[F.col(c).alias(f"__stored_{c}") for c in views])
+            batch = new_records.join(memo, "identifier", "left")
+            for c in views:
+                own = F.col(c) if c in new_records.columns else F.lit(None)
+                batch = batch.withColumn(c, F.coalesce(f"__stored_{c}", own)).drop(f"__stored_{c}")
+        annotated = provide(
+            batch, target, force=force, force_start=force_start, best_effort=best_effort
         )
-        # materialize before upsert rewrites the store this plan reads
+        # materialize before upsert rewrites the store this plan reads,
+        # and so the caller's action does not re-run the annotation
         annotated = annotated.localCheckpoint(eager=True)
-        self.upsert(annotated, force=any_force)
+        self.upsert(annotated, force=force or force_start is not None)
         return annotated

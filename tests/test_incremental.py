@@ -1,4 +1,4 @@
-"""Record store: memoization anti-join, staleness, cascade invalidation,
+"""Record store: memoization join, staleness, cascade invalidation,
 view-count upsert (SURVEY.md A18-A23)."""
 
 import pyspark.sql.functions as F
@@ -120,3 +120,122 @@ def test_store_compaction_reduces_files_and_preserves_content(spark, sf_dir):
     }
     post = {(r["bucket"], r["n_records"], r["total_tokens"]) for r in out}
     assert pre == post
+
+
+# --- one annotate pass per store op, one record per identifier -------------
+
+# four distinct documents, one verbatim duplicate, and one document held
+# back for the delta op
+_BASE_TEXTS = [
+    "The fast Spark job runs quickly. Hadoop customers merged data!",
+    "A small hash join is running on the vector table.",
+    "Lorem ipsum dolor sit amet. The customer said nothing?",
+    "Numbers like 42 and 7 appeared. Spark and Hadoop clusters scaled.",
+    "A small hash join is running on the vector table.",
+]
+_HELD_TEXT = "Completely new document text, held back for the delta."
+
+
+def _jvm_list(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _with_annotation_runs(spark, action):
+    """``action()``'s result and the number of SQL executions it started
+    whose physical plan runs the annotation worker (MapInPandas), read
+    from the SQL status store."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    sql = spark._jsparkSession.sharedState().statusStore()
+    bus.waitUntilEmpty()
+    before = max((e.executionId() for e in _jvm_list(sql.executionsList())), default=-1)
+    result = action()
+    bus.waitUntilEmpty()
+    runs = sum(
+        1
+        for e in _jvm_list(sql.executionsList())
+        if e.executionId() > before and "MapInPandas" in e.physicalPlanDescription()
+    )
+    return result, runs
+
+
+def test_every_op_keeps_one_record_per_identifier_and_input_row(spark, store_path):
+    base = records_from_texts(spark, _BASE_TEXTS)
+    full = records_from_texts(spark, [*_BASE_TEXTS, _HELD_TEXT])
+    store = RecordStore(spark, store_path)
+    ops = [
+        ("cold", base, {}),
+        ("warm", base, {}),
+        ("force", base, {"force": True}),
+        ("force_start", base, {"force_start": "TOKEN"}),
+        ("delta", full, {}),
+    ]
+    for name, batch, kw in ops:
+        n, runs = _with_annotation_runs(
+            spark, lambda: store.provide_incremental(batch, "POS", **kw).count()
+        )
+        if name == "cold":
+            # the cut, the store write and the caller's count share ONE
+            # annotation pass
+            assert runs == 1
+        assert n == batch.count(), name
+        stored = store.load()
+        ids = stored.select("identifier").distinct().count()
+        assert stored.count() == ids, name
+        assert ids == batch.select("identifier").distinct().count(), name
+        assert all({"tokens", "pos"} <= set(r.label_views) for r in stored.collect()), name
+
+
+def test_record_store_sets_no_session_conf(spark, store_path):
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    try:
+        before = spark.conf.getAll
+        RecordStore(spark, store_path)
+        assert spark.conf.getAll == before
+    finally:
+        spark.conf.unset(key)
+
+
+def _bucket_files(path: str) -> dict[str, set[str]]:
+    import os
+
+    return {
+        b: {f for f in os.listdir(os.path.join(path, b)) if f.startswith("part-")}
+        for b in os.listdir(path)
+        if b.startswith("id_bucket=")
+    }
+
+
+def test_upsert_rewrites_only_touched_buckets(spark, corpus, store_path):
+    store = RecordStore(spark, store_path)
+    store.write_full(provide(corpus, "TOKEN"))
+    before = _bucket_files(store_path)
+    new = provide(records_from_texts(spark, [_HELD_TEXT]), "TOKEN")
+    touched = f"id_bucket={new.first().identifier[0]}"
+    untouched = set(before) - {touched}
+    assert untouched, "the fixture must leave a bucket the upsert does not touch"
+    store.upsert(new)
+    after = _bucket_files(store_path)
+    assert {b: after[b] for b in untouched} == {b: before[b] for b in untouched}
+    assert after[touched] != before.get(touched)
+    assert store.load().count() == corpus.count() + 1
+
+
+def test_write_full_replaces_the_whole_store(spark, corpus, store_path):
+    store = RecordStore(spark, store_path)
+    store.write_full(provide(corpus, "TOKEN"))
+    one = provide(records_from_texts(spark, [_HELD_TEXT]), "TOKEN")
+    store.write_full(one)
+    assert [r.identifier for r in store.load().collect()] == [one.first().identifier]
+
+
+def test_store_accepts_runs_with_and_without_best_effort(spark, corpus, store_path):
+    # only a best-effort run carries annotation_error; the store takes
+    # both kinds of run in either order
+    store = RecordStore(spark, store_path)
+    store.provide_incremental(corpus, "TOKEN", best_effort=True)
+    assert store.provide_incremental(corpus, "POS").count() == corpus.count()
+    assert store.provide_incremental(corpus, "CHUNK", best_effort=True).count() == corpus.count()
+    stored = store.load().collect()
+    assert len(stored) == corpus.count()
+    assert all("chunk" in r.label_views and r.annotation_error is None for r in stored)
